@@ -36,6 +36,17 @@ def test_codegen_cache_covers_workload_diversity(spark):
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 4096
 
 
+def test_small_file_scan_packs_files_into_core_sized_tasks(spark, tmp_path):
+    # stock split sizing: ~100 tiny files (the stores' one-file-per-dir
+    # layout) pack into a few tasks per core, not one task per file
+    path = str(tmp_path / "tiny")
+    spark.range(0, 1000, 1, 100).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) >= 90
+    cores = spark.sparkContext.defaultParallelism
+    assert df._jdf.rdd().getNumPartitions() <= 2 * cores
+
+
 def test_env_overrides_reach_the_builder():
     # the knobs must stay operable per-deployment without code changes
     import inspect

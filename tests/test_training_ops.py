@@ -222,6 +222,62 @@ def test_signature_store_probe_plan_never_shuffles_store(spark, tmp_path, family
     assert re.search(r"PartitionFilters: \[[^\]]*sig_shard", plan), plan
 
 
+def _noop_write_scans(spark, df) -> list[set[str]]:
+    """Writes ``df`` to the noop sink and returns the output column
+    names of every file scan in the executed (final adaptive) plan of
+    that write. Reused exchanges are not scans, so a subtree the
+    planner evaluated once contributes its scans once. (Columns, not
+    the location: plan strings abbreviate long paths.)"""
+    import re
+
+    df.write.format("noop").mode("overwrite").save()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    runs = store.executionsList()
+    graph = store.planGraph(runs.apply(runs.size() - 1).executionId())
+    nodes = graph.allNodes()
+    scans = []
+    for i in range(nodes.size()):
+        node = nodes.apply(i)
+        if node.name().startswith("Scan parquet"):
+            cols = re.match(r"FileScan parquet \[([^\]]*)\]", node.desc())
+            scans.append({c.split("#")[0] for c in cols.group(1).split(",")})
+    return scans
+
+
+@pytest.mark.parametrize("family", ["minhash", "simhash"])
+def test_signature_store_probe_scans_each_table_once(spark, tmp_path, family):
+    """The probe's candidate → verify subtree is evaluated once: the
+    rep matches and their star-edge expansion share it, so the write
+    of its output scans bands, codes and edges once each (two copies
+    of the subtree scanned bands and codes twice per batch)."""
+    from weather_etl_pipeline_spark.catalog import load_table
+    from weather_etl_pipeline_spark.operators.dedup import _INC_NEW_PCT
+    from weather_etl_pipeline_spark.operators.dedup_store import (
+        build_signature_store,
+        probe_signature_store,
+    )
+
+    docs = load_table(spark, "/root/testdata/sf0.01", "documents")
+    bucket = (F.col("doc_id") * 2654435761) % 4294967296 % 100
+    # exact twins in the corpus, so the edges table is not empty
+    corpus = docs.filter(bucket < _INC_NEW_PCT)
+    corpus = corpus.unionByName(
+        corpus.limit(20).withColumn("doc_id", F.col("doc_id") + 10_000_000)
+    )
+    store = str(tmp_path / "sigstore")
+    build_signature_store(spark, corpus, store, family=family)
+    out = probe_signature_store(
+        spark, docs.filter(bucket >= _INC_NEW_PCT), store, family=family
+    )
+    # each store table has one column no other scanned table has
+    marks = {"rn": "bands", "id_shard": "codes", "rep_id": "edges"}
+    tables = [
+        marks[c] for cols in _noop_write_scans(spark, out) for c in cols if c in marks
+    ]
+    assert sorted(tables) == ["bands", "codes", "edges"]
+
+
 @pytest.mark.parametrize("family", ["minhash", "simhash"])
 def test_signature_store_append_equals_rebuild(spark, tmp_path, family):
     """The ingest loop's accept step, BOTH families: appending a
@@ -729,6 +785,60 @@ def test_ivf_index_probe_plan_is_pruned_and_broadcast(spark, tmp_path):
         assert "query_id" in line or "SinglePartition" in line, (
             "index-side shuffle:\n" + line + "\n" + plan
         )
+
+
+def test_ivf_probe_kernel_scans_probed_cells_once(spark, tmp_path):
+    """The scoring kernel emits each survivor's neighbor embedding, so
+    the exact re-score reads no second copy of the probed cells."""
+    from weather_etl_pipeline_spark.catalog import load_table
+    from weather_etl_pipeline_spark.functions.vectors import as_double
+    from weather_etl_pipeline_spark.operators.ivf_store import (
+        build_ivf_index,
+        probe_ivf_index,
+    )
+
+    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings").select(
+        "vec_id", as_double(F.col("embedding")).alias("e")
+    )
+    index = str(tmp_path / "ivf")
+    build_ivf_index(spark, emb, index)
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
+    )
+    scans = _noop_write_scans(spark, probe_ivf_index(spark, queries, index))
+    assert scans == [{"cell", "vec_id", "e"}]
+
+
+@pytest.mark.parametrize("kind", ["sig", "ivf"])
+def test_fresh_store_build_checks_for_meta_instead_of_reading_it(
+    spark, tmp_path, monkeypatch, kind
+):
+    """A first build finds no meta by a path check; it never attempts
+    the read (whose missing-path error printed a JVM stack trace on
+    every first build). The corrupt-meta test above keeps the
+    present-but-unreadable case loud."""
+    from weather_etl_pipeline_spark.operators import dedup_store, ivf_store
+
+    def _no_read(*_a, **_k):
+        raise AssertionError("meta read on a fresh build")
+
+    store = str(tmp_path / "store")
+    if kind == "sig":
+        monkeypatch.setattr(dedup_store, "read_store_watermark", _no_read)
+        docs = spark.createDataFrame(
+            [(1, "one two three four")], "doc_id long, text string"
+        )
+        dedup_store.build_signature_store(spark, docs, store)
+        monkeypatch.undo()
+        assert dedup_store.read_store_watermark(spark, store) == 1
+    else:
+        monkeypatch.setattr(ivf_store, "read_ivf_watermark", _no_read)
+        emb = spark.createDataFrame(
+            [(1, [1.0, 0.0])], "vec_id long, e array<double>"
+        )
+        ivf_store.build_ivf_index(spark, emb, store)
+        monkeypatch.undo()
+        assert ivf_store.read_ivf_watermark(spark, store) == 1
 
 
 def test_ivf_index_empty_corpus_bootstrap(spark, tmp_path):

@@ -74,6 +74,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import hround
 from ..functions.jvmrows import empty_df, one_row_df
+from ..sources.fs import path_exists
 from .dedup import (
     _LSH_BUCKET_CAP,
     _MH_BANDS,
@@ -222,12 +223,10 @@ def _read_edges(spark: SparkSession, store_path: str) -> DataFrame:
     rows → a dir with no part files, which schema inference refuses);
     a missing dir (store built before edges existed) reads as empty
     too, degrading to rep-only probe output rather than failing."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(_EDGES_SCHEMA).parquet(_edges_path(store_path))
-    except AnalysisException:
+    path = _edges_path(store_path)
+    if not path_exists(spark, path):
         return empty_df(spark, _EDGES_SCHEMA)
+    return spark.read.schema(_EDGES_SCHEMA).parquet(path)
 
 
 def build_signature_store(
@@ -299,14 +298,10 @@ def build_signature_store(
     # corrupt store as fresh would regress the committed watermark,
     # re-open the ingest loop's replay window, and quarantine a
     # redelivered batch as self-duplicates with no error anywhere.
-    from pyspark.errors import AnalysisException
-
+    # Checked, not caught: a fresh build is an expected condition.
     floor = -1 if watermark_hi is None else int(watermark_hi)
-    try:
+    if path_exists(spark, _meta_path(store_path)):
         floor = max(floor, read_store_watermark(spark, store_path))
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
     if _fence is not None:
         # fence BEFORE the destructive static overwrites below, not
         # only before the meta write: a rebuild that already lost its
@@ -783,6 +778,11 @@ def probe_signature_store(
     micro-batch (the signature recompute it buys is a map-only
     projection over the batch).
 
+    The result is lazy apart from the shard-key collect (skipped when
+    ``shard_keys`` is passed); consuming it once scans bands, codes and
+    edges once each — the verified rep matches feed both the output and
+    the star-edge expansion through one reused exchange.
+
     ``tables``: optional precomputed ``(sidecar, banded)`` for the
     batch — callers that consume the signatures more than once (the
     unified loop probes, then appends the survivors) derive them once,
@@ -850,7 +850,14 @@ def probe_signature_store(
     codes = spark.read.parquet(_codes_path(store_path)).filter(
         F.col("doc_id") <= watermark  # committed rows only
     )
-    verified = fam["verify"](cand, shb, codes)
+    # one evaluation of the candidate → verify subtree: both outputs
+    # below (the rep matches and their star-edge expansion) read it
+    # through this one batch-bounded exchange, which the planner
+    # executes once and reuses for the second consumer. The planner
+    # deduplicates exchanges, not arbitrary subtrees: without it each
+    # consumer carries its own copy and scans bands and codes again.
+    # Lazy and cache-free, so nothing outlives the call.
+    verified = fam["verify"](cand, shb, codes).repartition(1)
     # star-edge expansion: the store is collapse-first (build/append
     # band one rep per distinct text), so a verified (new, rep) match
     # stands for every exact member of rep's text too — identical text

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..functions.jvmrows import empty_df, one_row_df
 from ..functions.vectors import cosine
+from ..sources.fs import path_exists
 from .ivf import _assign, _dist2, _ITERS, _K, _seed_rows, kmeans_centroids
 
 __all__ = [
@@ -395,14 +396,9 @@ def build_ivf_index(
     # MISSING meta (fresh build) may skip the floor; a present-but-
     # unreadable meta fails loudly — same replay-window rationale as
     # build_signature_store.
-    from pyspark.errors import AnalysisException
-
     floor = -1 if watermark_hi is None else int(watermark_hi)
-    try:
+    if path_exists(spark, _meta_path(index_path)):
         floor = max(floor, read_ivf_watermark(spark, index_path))
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
     # vec_id is a key: replicated ingest rows must not multiply cell
     # membership (the probe's candidate set) or degenerate the k-means
     # init (replicated sample rows yield duplicate seed centroids) —
@@ -747,12 +743,12 @@ def _scored_cells_np(
     last, matching the window's NULLS LAST) — and the survivors are
     re-scored with the exact ``cosine`` fold expression, so emitted
     values are bit-identical to the HOF join's (the store-vs-inline
-    equality pins and the driver oracle hold unchanged). Self-matches
-    are masked in the kernel and cannot re-enter (the re-score joins on
-    the survivor ids). Multi-assign duplicates ((q, n) surviving from
-    two probed cells) re-join one row per copy; the shared
-    ``dropDuplicates`` tail in the probe removes them exactly as it
-    does for the HOF path.
+    equality pins and the driver oracle hold unchanged). Each survivor
+    carries its neighbor embedding out of the kernel, so the re-score
+    needs no second scan of the probed cells. Self-matches are masked
+    in the kernel. Multi-assign duplicates ((q, n) surviving from two
+    probed cells) stay one row per copy; the shared ``dropDuplicates``
+    tail in the probe removes them exactly as it does for the HOF path.
     """
     import numpy as np
     import pandas as pd
@@ -778,7 +774,7 @@ def _scored_cells_np(
         for pdf in batches:
             if not len(pdf):
                 continue
-            out_q, out_n = [], []
+            out_q, out_n, out_e = [], [], []
             # cells/ is partitioned by cell, so an Arrow batch is almost
             # always one group; the groupby is correctness, not cost
             for c, sub in pdf.groupby("cell"):
@@ -786,9 +782,8 @@ def _scored_cells_np(
                 if qidx is None:
                     continue
                 ids = sub["vec_id"].to_numpy(dtype=np.int64)
-                cm = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in sub["e"]]
-                )
+                vecs = sub["e"].to_numpy()
+                cm = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
                 cn = np.sqrt((cm * cm).sum(axis=1))
                 # chunk the query side so the sims matrix stays ≤ ~64MB
                 # regardless of how many of the batch's queries probe
@@ -821,32 +816,29 @@ def _scored_cells_np(
                             np.full(len(top), q_ids[qi], dtype=np.int64)
                         )
                         out_n.append(ids[top])
+                        out_e.extend(vecs[top])
             if out_q:
                 yield pd.DataFrame(
                     {
                         "query_id": np.concatenate(out_q),
                         "neighbor_id": np.concatenate(out_n),
+                        "e": out_e,
                     }
                 )
 
     survivors = cells.select("cell", "vec_id", "e").mapInPandas(
-        scan, "query_id long, neighbor_id long"
+        scan, "query_id long, neighbor_id long, e array<double>"
     )
-    # exact re-score: the bounded survivor set broadcasts against the
-    # query vectors (rebuilt driver-side from the already-collected
-    # rows — no recompute job) and streams the pruned cells scan for
-    # the neighbor embeddings; no shuffle is added on the scan side
+    # exact re-score: the bounded survivors stream against the
+    # broadcast query vectors (rebuilt driver-side from the
+    # already-collected rows — no recompute job); no shuffle and no
+    # second cells scan
     q_df = spark.createDataFrame(
         [(int(q), list(by_q[int(q)][0])) for q in q_ids],
         "query_id long, qe array<double>",
     )
     return (
-        F.broadcast(survivors.dropDuplicates(["query_id", "neighbor_id"]))
-        .join(F.broadcast(q_df), "query_id")
-        .join(
-            cells.select(F.col("vec_id").alias("neighbor_id"), "e"),
-            "neighbor_id",
-        )
+        survivors.join(F.broadcast(q_df), "query_id")
         .select(
             "query_id",
             "neighbor_id",

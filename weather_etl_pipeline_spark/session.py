@@ -98,15 +98,11 @@ def get_spark(
         )
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        # local-mode scan parallelism: the test parquet is a handful of
-        # small files, so the default 128 MB split puts a whole table in
-        # one task and idles the other 31 cores. 8 MB splits spread the
-        # scan. On a real cluster (many files, HDFS/S3 block sizes) keep
-        # the 128 MB default — override via SPARK_GRAFT_MAX_PARTITION_BYTES.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(8 * 1024 * 1024)),
-        )
+        # scan split size is left to Spark: its split is
+        # min(maxPartitionBytes, max(openCostInBytes, bytes / cores)),
+        # which already spreads a large scan over every core and packs
+        # many small files (the stores' one-file-per-partition-dir
+        # layout) into a few core-sized tasks instead of one task each
         .config("spark.ui.enabled", "false")
         .config(
             "spark.sql.warehouse.dir",

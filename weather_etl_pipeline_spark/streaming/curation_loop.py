@@ -113,7 +113,8 @@ def _run_concurrently(*thunks) -> None:
     wall time = max, not sum. Used only for stage pairs with NO
     ordering contract between them (the two stage-1 evidence writes;
     the ANN append and the lake write). Spark job submission is
-    thread-safe; the shared 32-core pool schedules both. The first
+    thread-safe; the scheduler shares the session's task slots between
+    them, so the pair overlaps when neither fills every core. The first
     exception propagates after all thunks settle, carrying every
     sibling failure as an exception NOTE (PEP 678) — a torn ANN-append
     ValueError must not be masked by a concurrent transient lake-write
